@@ -1,21 +1,34 @@
-"""Session-scoped cache registry: persist() sites inside query functions
-register here so harnesses can drain them between queries.
+"""Query-scoped state: the one module that holds it.
 
-A query function that persists an intermediate (all-pairs similarity weights,
-fingerprint lists, LM scores) cannot unpersist it before returning — the
-returned DataFrame still depends on it lazily. Left alone, those cached
-partitions accumulate across a session running many graded queries (r4
-ADVICE #5). The registry makes the persist scope explicit: the function
-calls :func:`scoped_persist`, and the runner (bench.py,
-tools/check_correctness.py, or any user loop) calls
-:func:`release_scoped_caches` once it has collected the query's result.
+It owns three things:
 
-Unreleased entries are still bounded by the session lifetime — this is a
+* **Scoped persists** (:func:`scoped_persist`). A query function that
+  persists an intermediate (all-pairs similarity weights, fingerprint lists,
+  LM scores, prefix-scan range caches) cannot unpersist it before returning
+  — the returned DataFrame still depends on it lazily. Left alone, those
+  cached partitions accumulate across a session running many graded queries
+  (r4 ADVICE #5). The registry makes the persist scope explicit.
+* **The eager once-per-plan guard**: the semantic hashes of plans an eager
+  :func:`scoped_persist` has already materialized since the last drain.
+* **The plan memo** (:func:`plan_memo`): lazy plans keyed by the identity of
+  the file they read. Metadata only — every action still scans the bytes.
+
+Who drains it: the runner (bench.py, tools/check_correctness.py, the
+benchmark harness, or any user loop) calls :func:`release_scoped_caches`
+once it has collected a query's result; that releases the scoped persists
+and resets the eager guard. The plan memo is NOT drained — its entries hold
+no data, are keyed by the session's applicationId and the file's
+(mtime_ns, size), and are bounded by :data:`_PLANS_MAX`.
+
+Unreleased persists are still bounded by the session lifetime — this is a
 cooperative drain, not a leak detector."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import os
+from typing import Callable, TypeVar
+
+from pyspark.sql import DataFrame, SparkSession
 
 _SCOPED: list[DataFrame] = []
 
@@ -27,6 +40,18 @@ _SCOPED: list[DataFrame] = []
 # Keyed by DataFrame.semanticHash(): a hash collision merely SKIPS an eager
 # count (falling back to today's lazy build — never a correctness issue).
 _MATERIALIZED: set[int] = set()
+
+# Plan memo: `spark.read.parquet(path)` costs ~0.13 s of DRIVER time per
+# call (file listing + footer schema inference, single-threaded), and every
+# query re-pays it for every table on every run. A catalog engine resolves a
+# table's schema once; this memo is that catalog.
+# The key carries the file's (mtime_ns, size) so a rewritten path is
+# rebuilt, and the session's applicationId so a new session never sees plans
+# from a stopped one.
+_PLANS: dict[tuple, object] = {}
+_PLANS_MAX = 256  # bound driver memory across long sessions
+
+T = TypeVar("T")
 
 
 def scoped_persist(df: DataFrame, storage_level=None, eager: bool = False) -> DataFrame:
@@ -68,3 +93,25 @@ def release_scoped_caches() -> int:
     _SCOPED.clear()
     _MATERIALIZED.clear()
     return n
+
+
+def plan_memo(spark: SparkSession, path: str, tag: str, build: Callable[[], T]) -> T:
+    """Return ``build()``'s value, memoized per (tag, session, file identity).
+
+    ``tag`` separates memos over the same file (a table's scan plan and a
+    plan derived from it). ``build`` must return lazy plans only — never
+    collected data — so a hit re-reads the current bytes when executed. A
+    caller whose plan depends on session confs stores what it needs to
+    re-assert them alongside the plan. An unreadable path is never memoized."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return build()
+    key = (tag, spark.sparkContext.applicationId, path, st.st_mtime_ns, st.st_size)
+    if key in _PLANS:
+        return _PLANS[key]  # type: ignore[return-value]
+    value = build()
+    if len(_PLANS) >= _PLANS_MAX:
+        _PLANS.clear()
+    _PLANS[key] = value
+    return value

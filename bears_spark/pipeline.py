@@ -11,8 +11,7 @@ Reference parity: src/bears/processor/_DataPipeline.py —
   the Spark compilation collapses all 1:1 transform steps into one projection
   (single whole-stage-codegen pass); fit steps are tiny aggregations whose
   results are broadcast as literal expressions.
-- MissingColumnBehavior ERROR/SKIP/EXECUTE (:500-511); PersistLevel hooks
-  become df.persist() between fit actions (:52-58).
+- MissingColumnBehavior ERROR/SKIP/EXECUTE (:500-511).
 
 Engine-independent logic (pattern matching, schema propagation) is ported
 directly; execution is Catalyst's.
@@ -91,11 +90,9 @@ class DataPipeline:
         self,
         steps: list[PipelineStepConfig],
         missing_column_behavior: MissingColumnBehavior | str = MissingColumnBehavior.ERROR,
-        persist_between_fits: bool = False,
     ):
         self.steps = steps
         self.missing_column_behavior = MissingColumnBehavior(missing_column_behavior)
-        self.persist_between_fits = persist_between_fits
         self._resolved: list[tuple[PipelineStepConfig, list[tuple[DataProcessor, list[str], str]]]] | None = None
         self.perf: list[StepPerf] = []
 
@@ -173,8 +170,6 @@ class DataPipeline:
             fit_ms = (time.perf_counter() - t0) * 1000
             out = self._apply_step(out, fanout)
             self.perf.append(StepPerf(step.output, step.transformer, len(fanout), fit_ms))
-            if self.persist_between_fits:
-                out = out.persist()
         return out
 
     def transform(self, df: DataFrame) -> DataFrame:

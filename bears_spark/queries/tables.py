@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bears_spark.caching import plan_memo
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -76,50 +78,21 @@ def _normalize_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-# Analyzed-plan memo: `spark.read.parquet(path)` costs ~0.13 s of DRIVER
-# time per call (file listing + footer schema inference, single-threaded —
-# guide §6/§7.3), and every query re-pays it for every table on every run.
-# A catalog engine resolves a table's schema once; this memo is that
-# catalog. Key includes the file's (mtime_ns, size) so a rewritten path is
-# re-inferred, and the session's applicationId so a new session never sees
-# plans from a stopped one. ONLY metadata is reused — the returned
-# DataFrame is a lazy plan; every action still scans the parquet bytes.
-# Each entry stores (df, needs_nanos_conf) so the session confs an events
-# plan depends on are re-asserted on EVERY call, memo hit or miss — if
-# anything in-session resets nanosAsLong, executing a memoized ns-encoded
-# plan would otherwise fail (VERDICT r11 "What's wrong" #5).
-_PLAN_MEMO: dict[tuple, tuple[DataFrame, bool]] = {}
-
-
-def _memo_key(spark: SparkSession, path: str) -> tuple | None:
-    import os
-
-    try:
-        st = os.stat(path)
-    except OSError:
-        return None
-    return (spark.sparkContext.applicationId, path, st.st_mtime_ns, st.st_size)
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Lazy scan of ``{sf_dir}/{name}.parquet``; the analyzed plan is reused
+    through caching.plan_memo while the file is unchanged."""
     path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         # session-conf side effects must apply on every call, memoized or not
         # (a caller may have flipped the tz since the plan was first built)
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    key = _memo_key(spark, path)
-    if key is not None and key in _PLAN_MEMO:
-        df, needs_nanos = _PLAN_MEMO[key]
-        if needs_nanos:
-            # the memoized plan decodes TIMESTAMP(NANOS) as int64; the conf
-            # must hold at EXECUTION time, so re-assert it on every hit
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return df
-    df, needs_nanos = _load_table_uncached(spark, path, name)
-    if key is not None:
-        if len(_PLAN_MEMO) > 256:  # bound driver memory across long sessions
-            _PLAN_MEMO.clear()
-        _PLAN_MEMO[key] = (df, needs_nanos)
+    df, needs_nanos = plan_memo(spark, path, "table", lambda: _load_table_uncached(spark, path, name))
+    if needs_nanos:
+        # a memoized plan decodes TIMESTAMP(NANOS) as int64; the conf must
+        # hold at EXECUTION time, so re-assert it on every call — if anything
+        # in-session resets nanosAsLong, executing the plan would otherwise
+        # fail (VERDICT r11 "What's wrong" #5)
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return df
 
 

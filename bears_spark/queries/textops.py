@@ -21,6 +21,7 @@ from bears_spark.functions.text import (
     stopword_ratio,
     token_count,
 )
+from bears_spark.caching import plan_memo
 from bears_spark.localframe import local_df
 from bears_spark.functions.litutil import double_lit
 from bears_spark.queries.tables import load_table
@@ -2197,21 +2198,14 @@ _IVFPQ_CSALT = "ivfseed"
 _IVFPQ_PSALT = "pqseed"
 
 
-# Plan memo for the ivfpq fit frame — METADATA only, same class as the
-# load_table analyzed-plan memo (queries/tables.py): the union-of-branches
-# PLAN is static per (applicationId, embeddings file identity), while the
-# collect() that EXECUTES it still runs on every invocation, reading the
-# parquet bytes. Rebuilding the plan cost ~0.1 s of py4j chatter per run.
-_IVFPQ_FIT_PLAN: dict[tuple, DataFrame] = {}
-
-
+# ann_ivfpq_topk memoizes this frame through caching.plan_memo — METADATA
+# only, like load_table: the union-of-branches PLAN is static per (applicationId,
+# embeddings file identity), while the collect() that EXECUTES it still runs
+# on every invocation, reading the parquet bytes. Rebuilding the plan cost
+# ~0.1 s of py4j chatter per run.
 def _ivfpq_fit_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bears_spark.functions.hashing import md5_hash64
-    from bears_spark.queries.tables import _memo_key
 
-    key = _memo_key(spark, f"{sf_dir}/embeddings.parquet")
-    if key is not None and key in _IVFPQ_FIT_PLAN:
-        return _IVFPQ_FIT_PLAN[key]
     emb = load_table(spark, sf_dir, "embeddings")
 
     # ONE fit-collect job for all three tiny states (coarse seeds, PQ seeds,
@@ -2230,7 +2224,7 @@ def _ivfpq_fit_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(n)
         )
 
-    fit = (
+    return (
         branch("c", _IVFPQ_CSALT, _IVFPQ_KC)
         .unionByName(branch("p", _IVFPQ_PSALT, _IVFPQ_KPQ))
         .unionByName(
@@ -2239,18 +2233,15 @@ def _ivfpq_fit_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    if key is not None:
-        if len(_IVFPQ_FIT_PLAN) > 64:
-            _IVFPQ_FIT_PLAN.clear()
-        _IVFPQ_FIT_PLAN[key] = fit
-    return fit
 
 
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     # the fit EXECUTES here on every invocation (fresh values from the
     # current parquet bytes); only the lazy plan object above is reused
-    fit = _ivfpq_fit_frame(spark, sf_dir).collect()
+    fit = plan_memo(
+        spark, f"{sf_dir}/embeddings.parquet", "ivfpq_fit", lambda: _ivfpq_fit_frame(spark, sf_dir)
+    ).collect()
     cseeds = sorted((r for r in fit if r["role"] == "c"), key=lambda r: (r["h"], r["vec_id"]))
     pseeds = sorted((r for r in fit if r["role"] == "p"), key=lambda r: (r["h"], r["vec_id"]))
     centroids = [(i, [float(x) for x in r["embedding"]]) for i, r in enumerate(cseeds)]

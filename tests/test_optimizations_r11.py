@@ -54,7 +54,7 @@ def test_widen_input_trigger_below_only_widens_serial_inputs(spark):
     assert widen_input(two, 4, trigger_below=2) is two  # 2 splits -> untouched
 
 
-def test_load_table_memo_hits_and_invalidates(spark, tmp_path):
+def test_load_table_memo_hits_and_invalidates(spark, tmp_path, monkeypatch):
     d = str(tmp_path / "sf")
     os.makedirs(d)
     shutil.copy(f"{SF}/nation.parquet", f"{d}/nation.parquet")
@@ -67,6 +67,31 @@ def test_load_table_memo_hits_and_invalidates(spark, tmp_path):
     df3 = T.load_table(spark, d, "nation")
     assert df3 is not df1
     assert "r_regionkey" in df3.columns  # fresh schema, not the memoized one
+
+    # second case: the ivfpq fit-plan memo, observed at the call site
+    import pyarrow.parquet as pq
+
+    from bears_spark.queries import textops
+
+    memo, fits = textops.plan_memo, []
+
+    def recording_memo(spark_, path, tag, build):
+        plan = memo(spark_, path, tag, build)
+        if tag == "ivfpq_fit":
+            fits.append(plan)
+        return plan
+
+    monkeypatch.setattr(textops, "plan_memo", recording_memo)
+    emb = f"{d}/embeddings.parquet"
+    shutil.copy(f"{SF}/embeddings.parquet", emb)
+    textops.ann_ivfpq_topk(spark, d)
+    textops.ann_ivfpq_topk(spark, d)
+    assert len(fits) == 2 and fits[1] is fits[0]  # memo hit on the same file
+    table = pq.read_table(emb)
+    pq.write_table(table.slice(0, table.num_rows - 1), f"{d}/rewritten.parquet")
+    os.replace(f"{d}/rewritten.parquet", emb)
+    textops.ann_ivfpq_topk(spark, d)
+    assert fits[2] is not fits[0]  # rewritten file: a fresh plan
 
 
 def test_load_table_memo_is_metadata_only(spark, tmp_path):

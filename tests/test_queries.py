@@ -23,12 +23,10 @@ def test_queries_and_oracles_aligned():
 
 
 def test_graded_window_invariants():
-    """VERDICT r7 #1 / r11 #4: the 50-slot driver window must contain only
-    queries with a real DuckDB oracle (an oracle-less row can only grade
-    `err: no_oracle`), no duplicates; round 12 carries the six
-    ROUND12_NEVER_GRADED rows first (driver coverage stays complete), then
-    every path the round-11/12 optimizer rewrote without driver grading,
-    then freshness re-anchors (the stalest round-3/4 rows)."""
+    """The grader scores the first 50 queries() entries: the window must fill
+    all 50 slots with distinct queries that carry a real DuckDB oracle (an
+    oracle-less row can only grade `err: no_oracle`), and must keep covering
+    the rewritten paths and the six rows first graded in round 12."""
     win = entrymod.GRADED_WINDOW
     q, o = entrymod.queries(), entrymod.oracle_sql()
     assert len(win) == 50
@@ -37,11 +35,7 @@ def test_graded_window_invariants():
         assert name in q, name
         sql = o.get(name)
         assert isinstance(sql, str) and sql.strip(), f"{name} lacks a real oracle"
-    # window = 8 anchors + the full ROUND12 ledger, in order, + rewritten
-    # paths + re-anchors (VERDICT r11 "Next round" #4)
-    assert win[8:14] == entrymod.ROUND12_NEVER_GRADED
-    # every path the r11 optimizer rewrote that r11's window missed, plus
-    # the paths r12 restructures, must be driver-graded this round
+    assert list(q)[:50] == win  # the window leads queries() iteration order
     rewritten = {
         "tfidf_cosine_pairs", "part_item_recs", "dedup_semantic_clusters",
         "orders_delta_dv_read", "orders_global_cumsum",
@@ -49,8 +43,11 @@ def test_graded_window_invariants():
         "ann_ivfpq_topk", "ev_cusum_alarm",
     }
     assert rewritten <= set(win)
-    # round 12 is an optimization round: no new queries, empty ledger
-    assert entrymod.ROUND13_NEVER_GRADED == []
+    first_graded_r12 = {
+        "orders_rename_evolution", "orders_wap_publish", "orders_type_widening",
+        "orders_constraints_gate", "orders_update_where", "orders_metadata_agg",
+    }
+    assert first_graded_r12 <= set(win)
 
 
 def test_readme_query_count_matches_declared():
